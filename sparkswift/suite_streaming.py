@@ -2509,7 +2509,7 @@ def st38_stream_media_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
     def ingest(batch_df, epoch_id):
         d = tempfile.mkdtemp(prefix=f"triage38_b{epoch_id}_", dir=base)
         # spread ONCE before the four-way fan-out (the mm32 shape):
-        # each branch's own _spread then no-ops and all four branches
+        # each branch's own spread then no-ops and all four branches
         # share ONE reused exchange instead of re-scanning and
         # re-exchanging the batch file per format (guide §2.4); width
         # is input-size-adaptive (operators.spread)

@@ -45,3 +45,28 @@ def test_window_is_exactly_fifty_registered_names():
     assert len(names) >= 50
     assert len(set(names[:50])) == 50
     assert set(suite._WINDOW) == set(names[:50])
+
+
+def test_engine_reads_only_the_deployment_env_settings():
+    """Task sizing lives in operators/spread.py as constants, and no
+    A/B env gate ships: the only SPARK_GRAFT_* variables the engine
+    reads are the deployment settings below. A new one needs two real
+    callers that want different values."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(suite.__file__).parent
+    names = {
+        m
+        for f in root.rglob("*.py")
+        for m in re.findall(r"SPARK_GRAFT_(\w+)", f.read_text())
+    }
+    assert names == {
+        "CPUS",
+        "DRIVER_MEM",
+        "UI",
+        "SCRATCH",
+        "SHUFFLE_PARTITIONS",
+        "ADVISORY_PARTITION",
+        "CKPT_CHECKSUM",
+    }

@@ -1348,21 +1348,22 @@ def test_chain_rounds_adaptive(spark, sf_dir, monkeypatch):
     optimizer-estimated input size (sequential rounds are pure
     overhead until per-key slice volume outgrows task memory):
     floored at 2 so the continued-carry path is always exercised,
-    one round per SPARK_GRAFT_CHAIN_ROUND_BYTES, capped at 64 — and
-    the adaptive result is bit-identical to any explicit count (the
+    one round per CHAIN_ROUND_BYTES, capped at 64 — and the adaptive
+    result is bit-identical to any explicit count (the
     bucketing-invariance law)."""
-    from sparkswift.operators.rolling import _chain_rounds, ewm_mean_global
+    from sparkswift.operators import spread
+    from sparkswift.operators.rolling import ewm_mean_global
     from sparkswift.sources import load_table
 
     ev = load_table(spark, sf_dir, "events")
     # tiny fixture -> the floor
-    assert _chain_rounds(ev) == 2
-    # one round per budget byte-chunk, env-parameterised for clusters
-    monkeypatch.setenv("SPARK_GRAFT_CHAIN_ROUND_BYTES", "1024")
-    assert _chain_rounds(ev) > 2  # grows with input/budget ratio
-    monkeypatch.setenv("SPARK_GRAFT_CHAIN_ROUND_BYTES", "1")
-    assert _chain_rounds(ev) == 64  # capped
-    monkeypatch.delenv("SPARK_GRAFT_CHAIN_ROUND_BYTES")
+    assert spread.chain_rounds(ev) == 2
+    # one round per budget byte-chunk
+    monkeypatch.setattr(spread, "CHAIN_ROUND_BYTES", 1024)
+    assert spread.chain_rounds(ev) > 2  # grows with input/budget ratio
+    monkeypatch.setattr(spread, "CHAIN_ROUND_BYTES", 1)
+    assert spread.chain_rounds(ev) == 64  # capped
+    monkeypatch.undo()
 
     base = {
         r.event_id: r.ewm

@@ -11,9 +11,6 @@ per-sample columns (cold numbers are noisy; 3 samples give a median).
 
 Usage:
   python tools/coldq.py [--sf DIR] [--samples N] q1 q2 ...
-Env passthrough: any SPARK_GRAFT_* var set in the parent reaches the
-child, so A/B of an env-gated code path is
-  SPARK_GRAFT_X=0 python tools/coldq.py ... vs SPARK_GRAFT_X=1 ...
 """
 
 from __future__ import annotations
